@@ -1,6 +1,8 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -154,18 +156,32 @@ object Sync {
   }
 
   /** Keyed MERGE into a day/attribute-partitioned parquet table that
-    * rewrites ONLY the partitions the updates touch — the merge-at-scale
-    * path for plain parquet (what a table format's MERGE does, minus the
-    * log): at 100 TB a daily update batch touches a handful of recent
-    * partitions, so the read AND the rewrite are bounded by the batch, not
-    * the table. Mechanics: collect the updates' distinct partition values
-    * (bounded by construction — that is this operator's contract; it
-    * throws above `maxPartitions` rather than silently planning a
-    * full-table rewrite), read ONLY those partitions (literal IN predicate
-    * → directory pruning at plan time), keep base rows whose key has no
-    * update (anti-join — updates win wholesale), union the updates, and
-    * write back with dynamic partition overwrite so untouched partitions'
-    * files are never opened, read, or replaced.
+    * lists, reads and rewrites ONLY the partitions the updates touch — the
+    * merge-at-scale path for plain parquet (what a table format's MERGE
+    * does, minus the log): at 100 TB a daily update batch touches a handful
+    * of recent partitions, so the directory listing, the read AND the
+    * rewrite are bounded by the batch, not by the table's age.
+    *
+    * Mechanics: collect the updates' distinct partition values rendered the
+    * way the parquet writer renders them (`cast(partitionCol as string)`
+    * under the session time zone; bounded by construction — that is this
+    * operator's contract; it throws above `maxPartitions` rather than
+    * silently planning a full-table rewrite). Each value names its
+    * directory through the writer's own `getPartitionPathString`, which
+    * escapes `/`, `=`, `%` … and maps NULL and `""` to
+    * `__HIVE_DEFAULT_PARTITION__`, so the NULL partition is read like any
+    * other. Touched directories that do not exist yet (inserts into a new
+    * partition, or a first sync into an absent table) are skipped — at most
+    * `maxPartitions` existence checks, and never a listing of the table
+    * root. The surviving directories are read with `basePath` and the
+    * updates' schema, so the partition column keeps the updates' type: it
+    * is never re-inferred from directory names, which would read `day=01`
+    * as the int 1 and write the merged rows back under `day=1`, beside the
+    * stale `day=01`. Base rows whose key has no update are kept (anti-join
+    * — updates win wholesale, and the updates' columns are the table's
+    * columns), the updates are unioned in, and the result is written back
+    * with dynamic partition overwrite, so untouched partitions' files are
+    * never listed, opened, read, or replaced.
     *
     * An update row whose `partitionCol` differs from its key's current
     * partition lands in the NEW partition while the anti-join removes the
@@ -173,13 +189,6 @@ object Sync {
     * callers moving rows across partitions must include both partitions'
     * updates in one batch (documented contract, checked nowhere: the
     * operator cannot see an untouched partition by design).
-    *
-    * A NULL `partitionCol` in the updates is handled explicitly: `isin`
-    * alone would never match the null partition (three-valued logic), so
-    * without the `isNull` branch the base rows living under
-    * `__HIVE_DEFAULT_PARTITION__` would be neither read nor kept while
-    * dynamic overwrite still rewrote that partition with only the update
-    * rows — silently deleting every non-updated row in it (r12 advice).
     *
     * NOT ATOMIC vs readers/failure: this is a read-then-dynamic-overwrite
     * of the SAME path in one job. That self-overwrite is safe against
@@ -199,26 +208,28 @@ object Sync {
                         maxPartitions: Int = 1000): Unit = {
     require(keys.nonEmpty && !keys.contains(partitionCol),
       "need row keys distinct from the partition column")
-    val touched = updates.select(partitionCol).distinct()
-      .limit(maxPartitions + 1).collect().map(_.get(0))
+    val touched = updates.select(col(partitionCol).cast("string")).distinct()
+      .limit(maxPartitions + 1).collect().map(_.getString(0))
     require(touched.length <= maxPartitions,
       s"updates touch more than $maxPartitions partitions — this operator " +
         "is for bounded-partition merges; rewrite the table instead")
     if (touched.isEmpty) return
-    val (nullTouched, nonNullTouched) = touched.partition(_ == null)
-    // explicit isNull branch: isin(...) is NULL (not true) for the null
-    // partition, which would drop __HIVE_DEFAULT_PARTITION__'s kept rows
-    val touchedPred = {
-      val inPred =
-        if (nonNullTouched.nonEmpty) col(partitionCol).isin(nonNullTouched.toSeq: _*)
-        else lit(false)
-      if (nullTouched.nonEmpty) inPred || col(partitionCol).isNull else inPred
-    }
-    val base = spark.read.parquet(basePath).filter(touchedPred)
-    val kept = base.join(
-      updates.select(keys.map(col): _*).distinct(), keys, "left_anti")
-    graft.sources.FileSink.overwritePartitions(
-      updates.select(base.columns.map(col): _*).unionByName(kept),
-      basePath, Seq(partitionCol))
+    // the resolved field name is the directory key the writer uses
+    val partName = updates.select(partitionCol).schema.head.name
+    val root = new Path(basePath)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dirs = touched
+      .map(v => new Path(root, ExternalCatalogUtils.getPartitionPathString(partName, v)))
+      .distinct.filter(fs.exists)
+    val merged =
+      if (dirs.isEmpty) updates
+      else {
+        val base = spark.read.schema(updates.schema).option("basePath", basePath)
+          .parquet(dirs.map(_.toString).toSeq: _*)
+        val kept = base.join(
+          updates.select(keys.map(col): _*).distinct(), keys, "left_anti")
+        updates.select(base.columns.map(col): _*).unionByName(kept)
+      }
+    graft.sources.FileSink.overwritePartitions(merged, basePath, Seq(partitionCol))
   }
 }

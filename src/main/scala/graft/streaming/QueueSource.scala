@@ -8,7 +8,7 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -79,11 +79,13 @@ class QueueSourceProvider extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     QueueSourceProvider.schema
 
+  // option keys are case-insensitive, like every built-in source's
   override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
-    new QueueTable(properties.getOrDefault("queue", "default"),
-      properties.getOrDefault("maxperbatch", "1000").toLong,
-      properties.getOrDefault("targetperpartition", "1000").toLong)
+                        properties: util.Map[String, String]): Table = {
+    val opts = new CaseInsensitiveStringMap(properties)
+    new QueueTable(opts.getOrDefault("queue", "default"),
+      opts.getLong("maxPerBatch", 1000L), opts.getLong("targetPerPartition", 1000L))
+  }
 }
 
 object QueueSourceProvider {
@@ -110,22 +112,44 @@ final class QueueTable(queue: String, maxPerBatch: Long,
 }
 
 /** Offset-tracked micro-batch view of one queue. `maxPerBatch` caps batch
-  * admission like the reference's NSQ `rdy` window (`Nsq.php:75-77`);
-  * `targetPerPartition` range-splits an admitted batch so a large backlog
-  * drains across tasks instead of serializing through one reader.
+  * admission like the reference's NSQ `rdy` window (`Nsq.php:75-77`): it is
+  * the default read limit, so each batch's END offset is at most
+  * `maxPerBatch` past its start and a backlog drains over several batches —
+  * under `Trigger.AvailableNow` too, up to the queue end seen when the
+  * trigger started. `targetPerPartition` range-splits an admitted batch so a
+  * large backlog drains across tasks instead of serializing through one
+  * reader.
   */
 final class QueueMicroBatchStream(queue: String, maxPerBatch: Long,
-                                  targetPerPartition: Long = 1000L) extends MicroBatchStream {
+                                  targetPerPartition: Long = 1000L)
+    extends MicroBatchStream with SupportsTriggerAvailableNow {
+  @volatile private var availableNowEnd: Option[Long] = None
+
   override def initialOffset(): Offset = QueueOffset(0L)
 
+  /** The uncapped queue end. */
   override def latestOffset(): Offset = QueueOffset(MessageQueues.size(queue))
+
+  override def getDefaultReadLimit: ReadLimit = ReadLimit.maxRows(maxPerBatch)
+
+  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
+    val end = availableNowEnd.getOrElse(MessageQueues.size(queue))
+    limit match {
+      case m: ReadMaxRows =>
+        QueueOffset(math.min(end, start.asInstanceOf[QueueOffset].value + m.maxRows))
+      case _ => QueueOffset(end)
+    }
+  }
+
+  override def prepareForTriggerAvailableNow(): Unit =
+    availableNowEnd = Some(MessageQueues.size(queue))
 
   override def deserializeOffset(json: String): Offset = QueueOffset(json.toLong)
 
+  // the end offset is the admitted batch: every offset in [start, end) is read
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val lo = start.asInstanceOf[QueueOffset].value
-    val hi0 = end.asInstanceOf[QueueOffset].value
-    val hi = math.min(hi0, lo + maxPerBatch)
+    val hi = end.asInstanceOf[QueueOffset].value
     if (hi <= lo) Array.empty
     else {
       val per = math.max(targetPerPartition, 1L)

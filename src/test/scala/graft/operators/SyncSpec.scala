@@ -177,4 +177,107 @@ class SyncSpec extends SparkSpec {
       Seq.empty[(Long, String, Double)].toDF("k", "day", "v"), Seq("k"), "day")
     assert(spark.read.parquet(base).count() == 1)
   }
+
+  private def partitionDirs(base: String): Seq[String] =
+    new java.io.File(base).listFiles().filter(_.isDirectory).map(_.getName).sorted.toSeq
+
+  test("upsertPartitioned keeps a string partition column's values: day=01 stays day=01") {
+    // inferring the partition type from directory names would read day=01
+    // as the int 1 and write the kept rows back under day=1, beside day=01
+    val base = java.nio.file.Files.createTempDirectory("graft_upsert_s_").toString + "/t"
+    Seq((1L, "01", 10.0), (2L, "01", 20.0), (3L, "02", 30.0))
+      .toDF("k", "day", "v").write.partitionBy("day").parquet(base)
+    val updates = Seq((1L, "01", 11.0), (4L, "02", 40.0)).toDF("k", "day", "v")
+    Sync.upsertPartitioned(spark, base, updates, keys = Seq("k"), partitionCol = "day")
+    assert(partitionDirs(base) == Seq("day=01", "day=02"))
+    val got = spark.read.schema(updates.schema).parquet(base).select("k", "day", "v")
+      .as[(Long, String, Double)].collect().sortBy(_._1).toSeq
+    assert(got == Seq((1L, "01", 11.0), (2L, "01", 20.0), (3L, "02", 30.0), (4L, "02", 40.0)))
+  }
+
+  test("upsertPartitioned round-trips partition values that need path escaping") {
+    val base = java.nio.file.Files.createTempDirectory("graft_upsert_e_").toString + "/t"
+    val days = Seq("a b", "x/y", "c}d", "plain")
+    days.zipWithIndex.map { case (d, i) => (i.toLong, d, i.toDouble) }
+      .toDF("k", "day", "v").write.partitionBy("day").parquet(base)
+    val dirsBefore = partitionDirs(base)
+    // update k=0..2 and add k=10 beside k=1 in the escaped x/y partition
+    val updates = Seq((0L, "a b", 100.0), (1L, "x/y", 101.0), (2L, "c}d", 102.0),
+      (10L, "x/y", 110.0)).toDF("k", "day", "v")
+    Sync.upsertPartitioned(spark, base, updates, keys = Seq("k"), partitionCol = "day")
+    assert(partitionDirs(base) == dirsBefore)
+    val got = spark.read.schema(updates.schema).parquet(base).select("k", "day", "v")
+      .as[(Long, String, Double)].collect().sortBy(_._1).toSeq
+    assert(got == Seq((0L, "a b", 100.0), (1L, "x/y", 101.0), (2L, "c}d", 102.0),
+      (3L, "plain", 3.0), (10L, "x/y", 110.0)))
+  }
+
+  test("upsertPartitioned creates a new partition for an insert-only batch, others untouched") {
+    val base = java.nio.file.Files.createTempDirectory("graft_upsert_i_").toString + "/t"
+    Seq((1L, "d1", 10.0), (2L, "d2", 20.0)).toDF("k", "day", "v")
+      .write.partitionBy("day").parquet(base)
+    def files(day: String) = new java.io.File(s"$base/day=$day").listFiles()
+      .map(f => f.getName -> f.lastModified).sorted.toSeq
+    val before = Seq("d1", "d2").map(files)
+    Sync.upsertPartitioned(spark, base, Seq((9L, "d9", 90.0)).toDF("k", "day", "v"),
+      keys = Seq("k"), partitionCol = "day")
+    assert(partitionDirs(base) == Seq("day=d1", "day=d2", "day=d9"))
+    assert(Seq("d1", "d2").map(files) == before)
+    val got = spark.read.parquet(base).select("k", "day", "v")
+      .as[(Long, String, Double)].collect().sortBy(_._1).toSeq
+    assert(got == Seq((1L, "d1", 10.0), (2L, "d2", 20.0), (9L, "d9", 90.0)))
+  }
+
+  test("upsertPartitioned into an absent table writes the updates as the table") {
+    val base = java.nio.file.Files.createTempDirectory("graft_upsert_a_").toString + "/t"
+    val updates = Seq((1L, "d1", 10.0), (2L, "d2", 20.0)).toDF("k", "day", "v")
+    Sync.upsertPartitioned(spark, base, updates, keys = Seq("k"), partitionCol = "day")
+    val got = spark.read.parquet(base).select("k", "day", "v")
+      .as[(Long, String, Double)].collect().sortBy(_._1).toSeq
+    assert(got == Seq((1L, "d1", 10.0), (2L, "d2", 20.0)))
+  }
+
+  test("upsertPartitioned lists only the touched partitions, never the whole table") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val parts = 64
+    val base = java.nio.file.Files.createTempDirectory("graft_upsert_l_").toString + "/t"
+    (0 until 2 * parts).map(i => (i.toLong, i % parts, i.toDouble))
+      .toDF("k", "day", "v").write.partitionBy("day").parquet(base)
+    // job groups tag this test's jobs; the barrier job's start proves every
+    // earlier job start has reached the listener (one queue, in order)
+    val group = s"upsert-listing-${System.nanoTime()}"
+    val barrier = s"$group-barrier"
+    val tasksPerJob = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val barrierSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => tasksPerJob.add(j.stageInfos.map(_.numTasks).sum)
+          case Some(`barrier`) => barrierSeen.countDown()
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "upsert touching 2 of 64 partitions")
+      Sync.upsertPartitioned(spark, base,
+        Seq((0L, 0, 1.0), (1L, 1, 2.0), (1000L, 1, 3.0)).toDF("k", "day", "v"),
+        keys = Seq("k"), partitionCol = "day")
+      sc.setJobGroup(barrier, "listener barrier")
+      spark.range(1).count()
+      assert(barrierSeen.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    val counts = tasksPerJob.asScala.toSeq
+    assert(counts.nonEmpty && counts.forall(_ < parts),
+      s"a job fanned out over the table's partitions: tasks per job $counts")
+    val got = spark.read.parquet(base).filter(col("day") <= 1).select("k", "v")
+      .as[(Long, Double)].collect().sortBy(_._1).toSeq
+    assert(got == Seq((0L, 1.0), (1L, 2.0), (64L, 64.0), (65L, 65.0), (1000L, 3.0)))
+    assert(spark.read.parquet(base).count() == 2 * parts + 1)
+  }
 }

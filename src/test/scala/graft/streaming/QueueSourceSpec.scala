@@ -20,8 +20,27 @@ class QueueSourceSpec extends SparkSpec {
     MessageQueues.push("qb", (1 to 10).map(i => s"m$i"): _*)
     val df = spark.readStream.format("graft.streaming.QueueSourceProvider")
       .option("queue", "qb").option("maxPerBatch", "3").load()
-    val got = Streams.runToMemoryComplete(spark, df, outputMode = "append")
-    assert(got.count() == 10)
+    val q = df.writeStream.format("memory").queryName("graft_qb_capped")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    val sizes = q.recentProgress.map(_.numInputRows).filter(_ > 0).toSeq
+    assert(sizes.length >= 4 && sizes.forall(_ <= 3), s"batch sizes $sizes")
+    val offsets = spark.table("graft_qb_capped").as[(Long, String)].collect().map(_._1).sorted
+    assert(offsets.toSeq == (0L until 10L), "every offset exactly once")
+  }
+
+  test("the admission cap bounds each batch's end offset, not just its read") {
+    MessageQueues.clear("qcap")
+    MessageQueues.push("qcap", (1 to 10).map(i => s"m$i"): _*)
+    val stream = new QueueMicroBatchStream("qcap", maxPerBatch = 4)
+    val limit = stream.getDefaultReadLimit
+    assert(stream.latestOffset(QueueOffset(0), limit) == QueueOffset(4))
+    assert(stream.latestOffset(QueueOffset(8), limit) == QueueOffset(10))
+    // AvailableNow stops at the queue end seen when the trigger started
+    stream.prepareForTriggerAvailableNow()
+    MessageQueues.push("qcap", "late")
+    assert(stream.latestOffset(QueueOffset(8), limit) == QueueOffset(10))
+    assert(stream.latestOffset() == QueueOffset(11))
   }
 
   test("restart from checkpoint resumes at the committed offset — no reprocessing") {
